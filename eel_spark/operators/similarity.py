@@ -310,6 +310,7 @@ def _assign_cells_packed(
     array rebuild of the mean update (one barrier fewer per iteration);
     ``cents`` must not collide with a ``df`` column (callers pick it
     against ``df.columns``)."""
+    assert cents not in df.columns, f"centroid column {cents!r} collides with df"
     best = F.array_min(
         F.transform(
             cents,

@@ -18,10 +18,12 @@ they use.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from eel_spark.datastream import DataStream
+from eel_spark.sources.hdfs import HdfsOps
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -70,7 +72,43 @@ def table_via_avro(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
     return AvroSource(path).to_datastream(spark)
 
 
+# qualified path -> ((application id, length, mtime), inferred schema);
+# one entry per path, replaced when the file or the session changes
+_FOOTER_SCHEMAS: dict[str, tuple[tuple[str, int, int], T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    qualified, length, mtime = HdfsOps(spark).file_identity(path)
+    ident = (spark.sparkContext.applicationId, length, mtime)
+    hit = _FOOTER_SCHEMAS.get(qualified)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _FOOTER_SCHEMAS[qualified] = (ident, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
+    """Load test table ``name`` from ``{sf_dir}/{name}.parquet``.
+
+    The parquet footer schema is inferred once per session and file, the
+    way an eel ``Source`` resolves its schema once for every stream built
+    from it. Inference launches a Spark job on every bare
+    ``spark.read.parquet``; a memo hit reads with the schema instead and
+    launches none.
+
+    - Key: the session's application id plus the file's qualified path,
+      length and modification time, read with one ``getFileStatus``.
+    - Re-infers when any of those changes (a rewritten file or a new
+      session); the entry for that path is then replaced, so the memo
+      holds at most one schema per path.
+    - Only the schema is shared, never a DataFrame: each call builds a
+      fresh relation, so a table read twice (a self-join) gets distinct
+      attribute ids.
+    - Unlocked: two racing first reads each infer, and the last write wins
+      with the same schema.
+    """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.parquet carries TIMESTAMP(NANOS), which Spark only reads
         # as a long (spark.sql.legacy.parquet.nanosAsLong). Read the nanos
@@ -82,9 +120,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
             pass  # session may have it fixed already
         from eel_spark.timeutils import normalize_ts
 
-        df = normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-        return DataStream(df)
-    return DataStream(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return DataStream(normalize_ts(_read_parquet(spark, path)))
+    return DataStream(_read_parquet(spark, path))
 
 
 def _c(c: Column | str) -> Column:
@@ -130,14 +167,6 @@ def dec(c: Column | str, scale: int = 6) -> Column:
 def dsum(c: Column, out_scale: int = 6) -> Column:
     """Exact decimal sum normalized to decimal(38,out_scale)."""
     return F.sum(c).cast(f"decimal(38,{out_scale})")
-
-
-def sql_dec(expr: str, scale: int = 6) -> str:
-    return f"CAST({expr} AS DECIMAL(18,{scale}))"
-
-
-def sql_dsum(expr: str, out_scale: int = 6) -> str:
-    return f"CAST(SUM({expr}) AS DECIMAL(38,{out_scale}))"
 
 
 # -- per-invocation scoped temp dirs (r9 ADVICE: eager reaping) --------------

@@ -60,6 +60,13 @@ class HdfsOps:
     def exists(self, path: str) -> bool:
         return bool(self._fs(path).exists(self._path(path)))
 
+    def file_identity(self, path: str) -> tuple[str, int, int]:
+        """(qualified path, length, modification time ms) from ONE
+        ``getFileStatus`` — the cheap change detector for a file whose
+        derived metadata (e.g. a parquet footer schema) is memoized."""
+        st = self._fs(path).getFileStatus(self._path(path))
+        return st.getPath().toString(), int(st.getLen()), int(st.getModificationTime())
+
     def mkdirs(self, path: str) -> bool:
         return bool(self._fs(path).mkdirs(self._path(path)))
 

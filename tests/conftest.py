@@ -18,12 +18,30 @@ def pytest_collection_modifyitems(config, items):
     here instead of 146 scattered decorators: the list is generated from
     a ``--durations`` run and auditable/regenerable as one block, and a
     conftest hook runs before the core ``-m`` filter so the added marks
-    deselect as if they were inline."""
+    deselect as if they were inline.
+
+    A SLOW key naming a function its module does not define fails the
+    run (checked for every module collected, however its items were then
+    narrowed): a renamed or deleted test would otherwise leave a stale key
+    that silently marks nothing, or later marks a new test of that name."""
+    modules = {}
     for item in items:
         base = item.path.name if hasattr(item, "path") else item.fspath.basename
         name = getattr(item, "originalname", None) or item.name
+        modules[base] = item.module
         if f"{base}::{name}" in SLOW:
             item.add_marker(pytest.mark.slow)
+    stale = sorted(
+        key for key in SLOW
+        if (mod := modules.get(key.split("::")[0])) is not None
+        and not hasattr(mod, key.split("::")[1])
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tests.py names tests that do not exist: " + ", ".join(stale)
+        )
+
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

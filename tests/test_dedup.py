@@ -127,6 +127,49 @@ def test_simhash_band_recall_exhaustive(spark):
     assert got == expected
 
 
+def _simhash64_column_built(hs):
+    """Reference: the Column-API builder simhash64_from_hashes replaced
+    (64 bit-vote aggregates, one py4j round trip per node)."""
+    def bit_vote(b: int):
+        return lambda acc, h: acc + F.when(
+            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
+        ).otherwise(-1)
+
+    out = F.lit(0).cast("long")
+    for b in range(64):
+        vote = F.aggregate(hs, F.lit(0).cast("long"), bit_vote(b))
+        bit = F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0))
+        out = out.bitwiseOR(F.shiftleft(bit, b))
+    return out
+
+
+def test_simhash_sql_form_matches_column_built(spark):
+    """The SQL-string simhash64_from_hashes is bit-identical to the
+    Column-built form on the sf0.001 documents (same analyzed plan), for
+    both accepted inputs; simhash64 matches the inlined reference; any
+    other Column is refused with the projection rule."""
+    from eel_spark.functions import hashes
+    from tests.conftest import SF_DIR
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    th = docs.select("doc_id", "text", hashes.token_hashes("text").alias("__th"))
+    ref = th.select("doc_id", _simhash64_column_built(F.col("__th")).alias("fp"))
+    expected = sorted(ref.collect())
+    assert len(expected) == docs.count() > 0
+    for hs in ("__th", F.col("__th")):
+        got = th.select("doc_id", hashes.simhash64_from_hashes(hs).alias("fp"))
+        assert got.sameSemantics(ref)
+        assert sorted(got.collect()) == expected
+    inlined = th.select(
+        "doc_id", _simhash64_column_built(hashes.token_hashes("text")).alias("fp")
+    )
+    conv = th.select("doc_id", hashes.simhash64("text").alias("fp"))
+    assert conv.sameSemantics(inlined)
+    assert sorted(conv.collect()) == expected
+    with pytest.raises(TypeError, match="own select"):
+        hashes.simhash64_from_hashes(hashes.token_hashes("text"))
+
+
 def test_embedding_near_duplicates(spark):
     import math
 
